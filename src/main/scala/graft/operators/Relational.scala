@@ -624,7 +624,9 @@ object Relational {
     // scaladoc promised (the cents domain is ~|rows| here: 583 k
     // distinct values at sf0.1, so a single ORDER BY c window would be a
     // serial sort+scan of the whole frequency table).
-    // r16 (measured, OPTIMIZATION_r16.md): the chunk id is now a PURE
+    // r16 (measured: same-window interleaved A/B, 4 cores, 7-rep
+    // medians, 2.15 / 2.38 s vs r15's 2.98 / 2.82 s — ROADMAP.md
+    // "Recent", r16 entry): the chunk id is now a PURE
     // FUNCTION of the value — equal-width cents ranges between the
     // table's min/max, chunk count derived from defaultParallelism —
     // instead of spark_partition_id() over a repartitionByRange. That

@@ -4,23 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, read from the SparkContext at session creation —
-      // the spark-submit-style injection path under test in
-      // ExtensionsInjectionSpec (a second same-JVM session could never
-      // exercise it, since the context conf is fixed at startup)
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the declared session (GraftSession) at 4 cores; its static
+  // spark.sql.extensions conf is the spark-submit-style injection path
+  // under test in ExtensionsInjectionSpec (a second same-JVM session
+  // could never exercise it, since the context conf is fixed at startup)
+  lazy val spark: SparkSession =
+    GraftSession("4", Seq("spark.app.name" -> "graft-test"))
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -3009,6 +2998,28 @@ class ExtensionsInjectionSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(math.abs(row.getDouble(1) - 23.0) < 1e-9)
     assert(row.getInt(2) == 2)
     assert(row.getInt(3) == 8)
+  }
+
+  test("register keeps an existing graft_* builder; declared confs come from GraftSession") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = TestSession.spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val dot = FunctionIdentifier("graft_dot")
+    val (info, builder) =
+      (registry.lookupFunction(dot).get, registry.lookupFunctionBuilder(dot).get)
+    org.apache.spark.sql.graft.VectorExpressions.register(fresh)
+    // a replacement re-wraps the entry in a new ExpressionInfo
+    assert(registry.lookupFunction(dot).get eq info,
+      "register replaced the injected graft_dot entry")
+    assert(registry.lookupFunctionBuilder(dot).get eq builder)
+    val declared = GraftSession.declared("4").toMap
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.files.maxPartitionBytes" -> "8m",
+      "spark.sql.extensions" -> "org.apache.spark.sql.graft.GraftExtensions")
+      .foreach { case (k, v) =>
+        assert(declared.get(k) == Some(v), s"GraftSession does not declare $k=$v")
+        assert(TestSession.spark.conf.get(k) == v, s"test session $k")
+      }
   }
 }
 
